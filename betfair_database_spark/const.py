@@ -91,11 +91,3 @@ class DuplicatePolicy(Enum):
     REPLACE = "replace"
     UPDATE = "update"
 
-
-class SQLAction(Enum):
-    """Per-market index action decided by the insert decision join
-    (reference const.py:84-89)."""
-
-    INSERT = "INSERT"
-    SKIP = "SKIP"
-    UPDATE = "UPDATE"

@@ -151,18 +151,14 @@ class BetfairDatabase:
             frame, counters = build_index_frame(self.spark, str(self.database_dir))
             counters.rows_inserted = self._write_index(frame, str(self._index_path))
             from betfair_database_spark.rollup import (
-                rollup_build,
-                rollup_path,
+                _meta_read,
                 spec_rollup_build,
                 spec_rollup_list,
                 spec_rollup_path,
             )
 
-            if rollup_path(self.database_dir).exists():
-                rollup_build(self)  # full index build → full rollup rebuild
+            # full index build → full rebuild of every rollup
             for nm in spec_rollup_list(self):
-                from betfair_database_spark.rollup import _meta_read
-
                 meta = _meta_read(spec_rollup_path(self.database_dir, nm))
                 spec_rollup_build(self, nm, meta["spec"])
         self.last_counters = counters
@@ -530,8 +526,10 @@ class BetfairDatabase:
         (hypertable-rollup) engine extension with no reference analogue
         (see rollup.py for the maintenance and consistency contract).
 
-        No arguments → the built-in per-(eventTypeId, start date) rollup
-        (unchanged behavior). With ``name`` + ``dims`` + ``aggs`` → a
+        No arguments → the built-in per-(eventTypeId, start date) rollup,
+        ``rollup.BUILTIN_ROLLUP`` under the reserved name ``builtin``
+        (``name="builtin"`` without dims/aggs does the same; with them it
+        raises ValueError). With ``name`` + ``dims`` + ``aggs`` → a
         NAMED user-spec rollup (round 9): ``dims`` are index columns or
         ``alias=SQL_EXPR`` derived dims, ``aggs`` are ``alias=op(col)``
         with op in count/sum/sumsq/min/max/approx_count_distinct, or
@@ -542,8 +540,9 @@ class BetfairDatabase:
         partition-incremental protocol and guarded by StaleRollupError.
         Returns the stored row count."""
         from betfair_database_spark.rollup import (
+            BUILTIN_NAME,
+            BUILTIN_ROLLUP,
             parse_spec,
-            rollup_build,
             spec_rollup_build,
             spec_rollup_path,
         )
@@ -551,10 +550,14 @@ class BetfairDatabase:
         with self._writer_lock():
             if not self._index_path.exists():
                 raise IndexMissingError(self.database_dir)
-            if name is None:
+            if name in (None, BUILTIN_NAME):
                 if dims or aggs:
-                    raise ValueError("dims/aggs require a rollup name")
-                return rollup_build(self)
+                    raise ValueError(
+                        "dims/aggs require a rollup name other than "
+                        f"{BUILTIN_NAME!r} (the built-in rollup's spec is "
+                        "fixed)"
+                    )
+                return spec_rollup_build(self, BUILTIN_NAME, BUILTIN_ROLLUP)
             if (dims is None) != (aggs is None):
                 # a lone half would silently fall into the heal path and
                 # discard the caller's new spec — refuse instead
@@ -584,11 +587,9 @@ class BetfairDatabase:
         RollupMissingError when none was materialized, StaleRollupError
         when the rollup lags the index (crash between index commit and
         rollup swap)."""
-        from betfair_database_spark.rollup import rollup_read, spec_rollup_read
+        from betfair_database_spark.rollup import BUILTIN_NAME, spec_rollup_read
 
-        if name is None:
-            return rollup_read(self)
-        return spec_rollup_read(self, name)
+        return spec_rollup_read(self, name or BUILTIN_NAME)
 
     def drop_rollup(self, name: str) -> bool:
         """Remove a named spec rollup (stops its maintenance). Returns
@@ -899,14 +900,9 @@ class BetfairDatabase:
         # Materialized-rollup maintenance (engine extension, rollup.py):
         # strictly AFTER the index commit — a crash here leaves the rollup
         # one snapshot behind, which rollup() detects (StaleRollupError)
-        # rather than serving stale aggregates. Named spec rollups get the
-        # same treatment.
-        from betfair_database_spark.rollup import (
-            rollup_update,
-            spec_rollup_update,
-        )
+        # rather than serving stale aggregates.
+        from betfair_database_spark.rollup import spec_rollup_update
 
-        rollup_update(self, repl, touched)
         spec_rollup_update(self, repl, touched)
 
     def _reap_files(self, rel_paths) -> None:
@@ -947,13 +943,9 @@ class BetfairDatabase:
             gone = self._index_path / f"eventTypeId={_part_key(v)}"
             if gone.exists():
                 shutil.rmtree(gone)
-        from betfair_database_spark.rollup import (
-            rollup_update,
-            spec_rollup_update,
-        )
+        from betfair_database_spark.rollup import spec_rollup_update
 
         if old is None:  # no base counts → a partial manifest would lie
-            rollup_update(self, repl, touched)
             spec_rollup_update(self, repl, touched)
             return
         merged = {k: e["count"] for k, e in old.items()}
@@ -975,7 +967,6 @@ class BetfairDatabase:
         # _upsert_partitions): the manifest was unlinked at the top of this
         # method, so calling earlier would stamp the rollup with snapshot 0
         # and the real commit below it would immediately read as stale.
-        rollup_update(self, repl, touched)
         spec_rollup_update(self, repl, touched)
 
 

@@ -114,24 +114,6 @@ def fingerprint(text: Column, length: int = 16) -> Column:
     return F.substring(F.md5(F.trim(normalized)), 1, length)
 
 
-def text_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One-pass per-document text profile."""
-    t = F.col(text_col)
-    feats = quality_features(t)
-    return df.select(
-        F.col(id_col),
-        feats["n_tokens"].alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_subword_tokens"),
-        feats["alpha_ratio"].alias("alpha_ratio"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        feats["avg_token_len"].alias("avg_token_len"),
-        quality_score(t, features=feats).alias("quality"),
-        lang_id(t).alias("pred_lang"),
-        fingerprint(t).alias("fingerprint"),
-    )
-
-
 def unigram_logprob_scores(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -1,23 +1,32 @@
-"""Incrementally-maintained materialized rollup over the market index.
+"""Incrementally-maintained materialized rollups over the market index.
 
-A continuous-aggregate (hypertable-rollup) analogue for the index: a
-small at-rest summary table of per-(eventTypeId, start date) market
-statistics that ``insert()``/``clean()`` keep in sync without re-scanning
-the index. The reference has no such feature (its SQLite index is always
-queried live); this is an engine-level extension for the 100 TB shape,
-where "how many markets per sport per day" should not cost an index scan.
+A continuous-aggregate (hypertable-rollup) analogue for the index: small
+at-rest summary tables that ``insert()``/``clean()`` keep in sync without
+re-scanning the index. The reference has no such feature (its SQLite index
+is always queried live); this is an engine-level extension for the 100 TB
+shape, where "how many markets per sport per day" should not cost an index
+scan.
+
+Every rollup is a named SPEC: group-by dims (index columns or
+``alias=SQL_EXPR`` derived columns) plus mergeable aggregates, parsed by
+``parse_spec`` and stored beside the index as
+``.betfairdatabaserollup-<name>.parquet``. The built-in per-(eventTypeId,
+start date) rollup that ``create_rollup()`` builds is one more spec,
+``BUILTIN_ROLLUP`` under the reserved name ``builtin``; it is built,
+maintained, read, routed and streamed by the same code as every other
+spec, and its derived ``startDate`` dim is routable like any other.
 
 Maintenance contract
 --------------------
 Index maintenance rewrites whole ``eventTypeId=`` partitions
-(``database._upsert_partitions``), so the rollup updates at the same
-granularity: summary rows for TOUCHED partitions are recomputed from the
-replacement frame (already checkpointed in memory by the upsert), summary
-rows for untouched partitions are carried over from the previous rollup
-file. The index parquet is never re-read during an incremental update —
-pinned by ``test_maintenance.py`` (``_read_index`` patched to raise).
-Compute is O(replacement rows + rollup size); the at-rest rollup is
-bounded by |eventTypeId| x |days|, never by market count.
+(``database._upsert_partitions``), so rollups update at the same
+granularity: partial rows for TOUCHED partitions are recomputed from the
+replacement frame (already checkpointed in memory by the upsert), rows
+for untouched partitions are carried over from the previous rollup file.
+The index parquet is never re-read during an incremental update — pinned
+by ``test_maintenance.py`` (``_read_index`` patched to raise). Compute is
+O(replacement rows + rollup size); the at-rest rollup is bounded by
+|eventTypeId| x |dim values|, never by market count.
 
 Consistency
 -----------
@@ -26,15 +35,16 @@ derived from (``_rollup_meta.json`` inside the rollup directory — the
 leading underscore hides it from Spark's file listing). The rollup swap
 happens strictly AFTER the index commit, so a crash in between leaves a
 rollup one snapshot behind; ``rollup()`` compares snapshot numbers and
-raises ``StaleRollupError`` instead of serving stale aggregates, and
-``create_rollup()`` is the (full-rebuild) heal. The swap itself is
-temp-write + directory replace: a crash mid-swap can only lose the rollup
-entirely (detected as missing), never serve a torn file set.
+raises ``StaleRollupError`` instead of serving stale aggregates, the
+router skips it, and ``create_rollup()`` is the (full-rebuild) heal. The
+swap itself is temp-write + directory replace: a crash mid-swap can only
+lose the rollup entirely (detected as missing), never serve a torn file
+set.
 
-All aggregates are additive/mergeable (counts, sums, min/max) so the
-carry-over + recompute composition is exact. marketStartTime is the
-index's ISO-8601 string; ISO-8601 min/max under string ordering equals
-chronological min/max.
+All aggregates are additive/mergeable (counts, sums, min/max, sketches)
+so the carry-over + recompute composition is exact. marketStartTime is
+the index's ISO-8601 string; ISO-8601 min/max under string ordering
+equals chronological min/max.
 """
 
 from __future__ import annotations
@@ -46,69 +56,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, functions as F
 
 from betfair_database_spark.plans.materialize import materialize
-from pyspark.sql.types import (
-    DateType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-ROLLUP_DIRNAME = ".betfairdatabaserollup.parquet"
 _META_NAME = "_rollup_meta.json"
-# Storage-format version of the BUILT-IN rollup (round-12 ADVICE).
-# Format 2 = sums store NULL (not coalesced 0) for all-NULL cells
-# (round-11 parity fix). A pre-round-11 rollup keeps 0s in partitions
-# never touched since (rollup_update only recomputes touched ones), so
-# routed sum over such a cell would return 0 while the scan returns
-# NULL. A format-1 rollup is therefore NEVER a routing candidate,
-# rollup_read refuses it loudly, and maintenance heals it by a one-time
-# full rebuild.
-ROLLUP_FORMAT = 2
-
-ROLLUP_SCHEMA = StructType(
-    [
-        StructField("eventTypeId", StringType()),
-        StructField("startDate", DateType()),
-        StructField("markets", LongType()),
-        StructField("bspMarkets", LongType()),
-        StructField("inPlayMarkets", LongType()),
-        StructField("settledMarkets", LongType()),
-        StructField("runnersTotal", LongType()),
-        StructField("firstStart", StringType()),
-        StructField("lastStart", StringType()),
-    ]
-)
-
-
-def summarize(index_df: DataFrame) -> DataFrame:
-    """The rollup aggregate: per-(eventTypeId, start date) market stats.
-
-    Pure function of index rows — used for the full build, the touched-
-    partition recompute, and the from-scratch reference in tests. One
-    hash aggregate with map-side partials; no window, no shuffle beyond
-    the group-by exchange.
-    """
-    return index_df.groupBy(
-        F.col("eventTypeId"),
-        F.to_date(F.substring("marketStartTime", 1, 10)).alias("startDate"),
-    ).agg(
-        F.count(F.lit(1)).alias("markets"),
-        # sums store NULL (not 0) for all-NULL cells: SQLite's sum() over
-        # all NULLs is NULL, and the routed path must merge to exactly
-        # what the scan's sum() returns (round-11 ADVICE parity fix) —
-        # a coalesced 0 here would make routed=0 vs scan=NULL
-        F.sum("bspMarket").cast("long").alias("bspMarkets"),
-        F.sum("turnInPlayEnabled").cast("long").alias("inPlayMarkets"),
-        F.count("marketSettledTime").alias("settledMarkets"),
-        F.sum("runners").cast("long").alias("runnersTotal"),
-        F.min("marketStartTime").alias("firstStart"),
-        F.max("marketStartTime").alias("lastStart"),
-    )
-
-
-def rollup_path(database_dir: Path) -> Path:
-    return Path(database_dir) / ROLLUP_DIRNAME
 
 
 def _meta_read(path: Path) -> dict | None:
@@ -118,98 +67,17 @@ def _meta_read(path: Path) -> dict | None:
         return None
 
 
-def _atomic_swap(db, frame: DataFrame, index_snapshot: int) -> int:
-    """Write ``frame`` + meta to a sibling temp dir, then replace the live
-    rollup. The rollup is group-cardinality-sized, so one part-file."""
-    live = rollup_path(db.database_dir)
-    tmp = live.with_suffix(".swap")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    out = frame.select(*[f.name for f in ROLLUP_SCHEMA.fields])
-    out.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    n = db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(tmp)).count()
-    (tmp / _META_NAME).write_text(
-        json.dumps(
-            {
-                "index_snapshot": index_snapshot,
-                "rows": n,
-                "format": ROLLUP_FORMAT,
-            }
-        )
-    )
-    if live.exists():
-        shutil.rmtree(live)
-    tmp.rename(live)
-    return n
-
-
-def rollup_build(db) -> int:
-    """Full rollup (re)build from the live index. Returns row count."""
-    from betfair_database_spark.database import _manifest_snapshot_no
-
-    snap = _manifest_snapshot_no(db._index_path)
-    return _atomic_swap(db, summarize(db._read_index()), snap)
-
-
-def rollup_update(db, repl: DataFrame, touched: list) -> None:
-    """Partition-incremental rollup maintenance, called by the index upsert
-    AFTER its manifest commit. ``repl`` is the checkpointed replacement
-    frame (may contain rows outside ``touched``; filtered here exactly as
-    the upsert filters), ``touched`` the eventTypeId values whose index
-    partitions were rewritten. No-op when no rollup is materialized.
-
-    Reads: the previous rollup file (small) + ``repl`` (in memory).
-    Never re-reads the index parquet.
-    """
-    from betfair_database_spark.database import _manifest_snapshot_no
-
-    live = rollup_path(db.database_dir)
-    if not live.exists() or not touched:
-        return
-    snap = _manifest_snapshot_no(db._index_path)
-    meta = _meta_read(live)
-    if meta is not None and meta.get("format", 1) < ROLLUP_FORMAT:
-        # pre-format-2 rollup: untouched partitions may carry coalesced
-        # 0s where format 2 stores NULL — carrying them over would
-        # launder the wrong values forever; heal by a one-time full
-        # rebuild (round-12 ADVICE)
-        rollup_build(db)
-        return
-    if meta is None or meta.get("index_snapshot") not in (snap - 1, snap):
-        # Snapshot numbers are sequential, so the only safe incremental
-        # bases are snap-1 (the normal post-commit call: rollup was fresh
-        # at the previous snapshot) and snap itself (an idempotent re-fold:
-        # touched partitions are recomputed from ``repl`` either way). Any
-        # other value means a prior maintenance op crashed between its
-        # index commit and rollup swap (or the index was force-rebuilt);
-        # carrying those rows over and stamping ``snap`` would launder the
-        # staleness past the StaleRollupError guard. Heal by a full
-        # rebuild from the live index instead.
-        rollup_build(db)
-        return
-    keep = db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(live)).where(
-        ~db._partition_filter(touched)
-    )
-    fresh = summarize(repl.where(db._partition_filter(touched)))
-    _atomic_swap(
-        db,
-        materialize(keep.unionByName(fresh), "rollup-replacement"),
-        snap,
-    )
-
-
 # =========================================================================
-# Generalized rollup specs (round 9): user-declared dims + additive aggs
+# Rollup specs (round 9): user-declared dims + additive aggs
 # =========================================================================
 #
-# The single hard-coded per-(sport, day) rollup above serves one query
-# shape; reference users group by venue, country, marketType just as often
+# Reference users group by sport and day, venue, country, marketType
 # (reference README query shapes). A spec declares group-by dims (index
 # columns, or alias=EXPR derived columns) and mergeable aggregates —
-# count / sum / min / max / approx_count_distinct (HLL sketch) — and gets
-# the SAME machinery: materialized beside the index under a name,
-# partition-incrementally maintained by insert()/clean() (never re-reads
-# the index), snapshot-stamped, StaleRollupError-guarded.
+# count / sum / min / max / approx_count_distinct (HLL sketch) — and is
+# materialized beside the index under a name, partition-incrementally
+# maintained by insert()/clean() (never re-reads the index),
+# snapshot-stamped, StaleRollupError-guarded.
 #
 # Storage grain: the at-rest frame always includes eventTypeId (the index
 # partition key) in front of the user dims, with PARTIAL aggregates per
@@ -665,6 +533,18 @@ def parse_spec(dims: list[str], aggs: list[str]) -> dict:
     return {"dims": nd, "aggs": na}
 
 
+# The built-in per-(sport, day) rollup that ``create_rollup()`` builds.
+# eventTypeId is a plain dim, so the stored grain is exactly
+# (eventTypeId, startDate) and the user view has the same rows.
+BUILTIN_NAME = "builtin"
+BUILTIN_ROLLUP = parse_spec(
+    dims=["eventTypeId", "startDate=to_date(substring(marketStartTime, 1, 10))"],
+    aggs=["markets=count()", "bspMarkets=sum(bspMarket)",
+          "inPlayMarkets=sum(turnInPlayEnabled)",
+          "settledMarkets=count(marketSettledTime)", "runnersTotal=sum(runners)",
+          "firstStart=min(marketStartTime)", "lastStart=max(marketStartTime)"])
+
+
 def _spec_dim_cols(spec: dict):
     return [
         F.expr(d["expr"]).alias(d["alias"]) if d["expr"] else F.col(d["alias"])
@@ -684,6 +564,8 @@ def _spec_partial_aggs(spec: dict):
                 (F.count(col) if col else F.count(F.lit(1))).alias(al)
             )
         elif op == "sum":
+            # NULL (not 0) for an all-NULL cell: SQLite's sum() over all
+            # NULLs is NULL, and the routed merge must equal the scan
             out.append(F.sum(col).alias(al))
         elif op == "sumsq":
             # second-moment partial (round 12): exact in the column's
@@ -867,8 +749,9 @@ def spec_rollup_path(database_dir: Path, name: str) -> Path:
 
 
 def _spec_atomic_swap(db, path: Path, frame: DataFrame, meta: dict) -> int:
-    """Same temp-write + directory-replace commit as the default rollup,
-    but schema-free (spec schemas vary) and carrying the spec in meta."""
+    """Write ``frame`` + meta (spec and index snapshot) to a sibling temp
+    dir, then replace the live rollup. The rollup is group-cardinality-
+    sized, so one part-file."""
     tmp = path.with_suffix(".swap")
     if tmp.exists():
         shutil.rmtree(tmp)
@@ -898,19 +781,26 @@ def spec_rollup_build(db, name: str, spec: dict) -> int:
 
 
 def spec_rollup_list(db) -> list[str]:
-    """Names of materialized spec rollups (directory scan, no Spark)."""
+    """Names of materialized rollups (directory scan, no Spark), in the
+    router's candidate order: named specs sorted, the built-in last (a
+    narrower user spec covering the same query wins)."""
     out = []
     for p in Path(db.database_dir).glob(".betfairdatabaserollup-*.parquet"):
         meta = _meta_read(p)
         if meta and "spec" in meta:
             out.append(meta["name"])
-    return sorted(out)
+    return sorted(out, key=lambda n: (n == BUILTIN_NAME, n))
 
 
 def spec_rollup_update(db, repl: DataFrame, touched: list) -> None:
-    """Partition-incremental maintenance of EVERY named spec rollup —
-    same contract as rollup_update (called strictly after the index
-    commit, never re-reads the index, heals snapshot gaps by rebuild)."""
+    """Partition-incremental maintenance of EVERY materialized rollup,
+    called by the index upsert AFTER its manifest commit. ``repl`` is the
+    checkpointed replacement frame (may contain rows outside ``touched``;
+    filtered here exactly as the upsert filters), ``touched`` the
+    eventTypeId values whose index partitions were rewritten.
+
+    Reads: each previous rollup file (small) + ``repl`` (in memory).
+    Never re-reads the index parquet."""
     from betfair_database_spark.database import _manifest_snapshot_no
 
     if not touched:
@@ -923,7 +813,15 @@ def spec_rollup_update(db, repl: DataFrame, touched: list) -> None:
             continue
         spec = meta["spec"]
         if meta.get("index_snapshot") not in (snap - 1, snap):
-            spec_rollup_build(db, name, spec)  # heal: see rollup_update
+            # Snapshot numbers are sequential, so the only safe incremental
+            # bases are snap-1 (the normal post-commit call) and snap itself
+            # (an idempotent re-fold: touched partitions are recomputed from
+            # ``repl`` either way). Any other value means a prior maintenance
+            # op crashed between its index commit and rollup swap (or the
+            # index was force-rebuilt); carrying those rows over and stamping
+            # ``snap`` would launder the staleness past the StaleRollupError
+            # guard. Heal by a full rebuild from the live index instead.
+            spec_rollup_build(db, name, spec)
             continue
         keep = db.spark.read.parquet(str(path)).where(
             ~db._partition_filter(touched)
@@ -937,6 +835,13 @@ def spec_rollup_update(db, repl: DataFrame, touched: list) -> None:
             materialize(keep.unionByName(fresh), "spec-rollup-replacement"),
             {"index_snapshot": snap, "spec": spec, "name": name},
         )
+
+
+def rollup_update(db, repl: DataFrame, touched: list) -> None:
+    """Former maintenance entry point of the built-in rollup, now the same
+    as ``spec_rollup_update``. The package never calls it; the name stays
+    because ``perfbench/spans.py`` wraps it when tracing."""
+    spec_rollup_update(db, repl, touched)
 
 
 def spec_rollup_read(db, name: str) -> DataFrame:
@@ -1005,20 +910,6 @@ _WHERE_KEYWORDS = {
     "AND", "OR", "NOT", "IN", "IS", "NULL", "BETWEEN",
     "LIKE", "GLOB", "ESCAPE", "TRUE", "FALSE",
 }
-
-# the built-in per-(sport, day) rollup as a routing candidate: its stored
-# columns are FINAL aggregates at (eventTypeId, startDate) grain, which
-# re-merge exactly (counts/sums by sum, min/max by min/max)
-_BUILTIN_AGG_MAP = {
-    ("count", None): ("markets", "sum"),
-    ("sum", "bspMarket"): ("bspMarkets", "sum"),
-    ("sum", "turnInPlayEnabled"): ("inPlayMarkets", "sum"),
-    ("count", "marketSettledTime"): ("settledMarkets", "sum"),
-    ("sum", "runners"): ("runnersTotal", "sum"),
-    ("min", "marketStartTime"): ("firstStart", "min"),
-    ("max", "marketStartTime"): ("lastStart", "max"),
-}
-
 
 def parse_select_shape(columns, group_by):
     """Classify a select() column list as an aggregate query: returns
@@ -1290,13 +1181,12 @@ def route_select(db, columns, where, group_by, local_tz=None):
         if w is None:
             return None
         wid = w
-    needed_dims = set(dims_sel) | set(gb) | wid
     try:
         current = _manifest_snapshot_no(db._index_path)
     except OSError:
         return None
 
-    # spec rollups first (they can cover arbitrary dims), built-in last
+    # candidates in spec_rollup_list order: named specs, built-in last
     for name in spec_rollup_list(db):
         path = spec_rollup_path(db.database_dir, name)
         meta = _meta_read(path)
@@ -1340,65 +1230,4 @@ def route_select(db, columns, where, group_by, local_tz=None):
         except Exception:
             continue
         return f"rollup:{name}", out
-
-    # built-in rollup: dims limited to eventTypeId
-    live = rollup_path(db.database_dir)
-    meta = _meta_read(live)
-    if (
-        meta is not None
-        and meta.get("format", 1) >= ROLLUP_FORMAT
-        and meta.get("index_snapshot") == current
-        and needed_dims <= {"eventTypeId"}
-        and all((a[0], a[1]) in _BUILTIN_AGG_MAP for a in aggs)
-    ):
-        frame = db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(live))
-        where_expr = translate_where(where, local_tz=local_tz) if where else None
-        exprs = []
-        for op, col, alias in (a[:3] for a in aggs):
-            src, mop = _BUILTIN_AGG_MAP[(op, col)]
-            e = getattr(F, mop)(src)
-            if op == "count":  # empty-global parity with count(*)
-                e = F.coalesce(e, F.lit(0)).cast("long")
-            exprs.append(e.alias(alias))
-        try:
-            df = frame
-            if where_expr:
-                df = df.where(F.expr(where_expr))
-            out = (
-                df.groupBy(*gb).agg(*exprs) if gb else df.agg(*exprs)
-            ).select(*order)
-            out.schema
-        except Exception:
-            return None
-        return "rollup:builtin", out
     return None
-
-
-def rollup_read(db) -> DataFrame:
-    """The committed rollup, freshness-checked against the index manifest."""
-    from betfair_database_spark.database import _manifest_snapshot_no
-    from betfair_database_spark.exceptions import (
-        RollupMissingError,
-        StaleRollupError,
-    )
-
-    live = rollup_path(db.database_dir)
-    meta = _meta_read(live)
-    if meta is None:
-        raise RollupMissingError(db.database_dir)
-    current = _manifest_snapshot_no(db._index_path)
-    if meta.get("format", 1) < ROLLUP_FORMAT:
-        raise StaleRollupError(
-            f"rollup was written by storage format {meta.get('format', 1)} "
-            f"(< {ROLLUP_FORMAT}): untouched partitions may store 0 where "
-            "format 2 stores NULL for all-NULL sums — call create_rollup() "
-            "to rebuild (any insert()/clean() also heals it)"
-        )
-    if meta.get("index_snapshot") != current:
-        raise StaleRollupError(
-            f"rollup was built at index snapshot {meta.get('index_snapshot')} "
-            f"but the index is at snapshot {current} — a maintenance write "
-            "crashed between the index commit and the rollup swap; call "
-            "create_rollup() to rebuild"
-        )
-    return db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(live))

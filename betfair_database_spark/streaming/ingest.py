@@ -164,8 +164,8 @@ def index_upsert_batch(
 ) -> None:
     """One keyed upsert micro-batch for ``start_index_stream`` —
     module-level so tests can drive replay/crash windows directly (same
-    convention as rollup_merge_batch). Idempotent BY KEY rather than by
-    batch id: a redelivered batch deletes-then-appends the same markets,
+    convention as spec_rollup_merge_batch). Idempotent BY KEY rather than
+    by batch id: a redelivered batch deletes-then-appends the same markets,
     landing on the same rows.
 
     Racing enrichment is re-run over the MERGED frame (round 12): the
@@ -309,96 +309,6 @@ def _stream_meta_read(d) -> dict | None:
         return None
 
 
-def rollup_merge_batch(
-    batch: DataFrame,
-    batch_id: int,
-    rollup_dir: str,
-    stream_id: "str | None" = None,
-) -> None:
-    """One idempotent micro-batch fold for ``start_rollup_stream``.
-
-    ``foreachBatch`` is at-least-once (a micro-batch is re-run after a
-    failure between the sink write and the checkpoint commit) and an
-    additive fold is not naturally idempotent, so the sink makes itself
-    so: every swap records the applied ``batch_id`` in
-    ``_stream_meta.json`` inside the rollup directory (underscore-hidden
-    from Spark's file listing) and a replayed batch with
-    ``batch_id <= recorded`` no-ops. The swap is write-aside + rename:
-    data parquet first, then the meta file (a complete meta implies
-    complete data), then replace the live dir; a crash between the
-    rmtree and the rename is healed on the next invocation by adopting
-    the completed ``.swap`` dir — no window loses history or
-    double-counts. Module-level so tests can drive replay directly.
-    """
-    import json
-    import os
-    import shutil
-    from pathlib import Path
-
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import Window
-
-    from betfair_database_spark.rollup import ROLLUP_SCHEMA, summarize
-
-    out_cols = [f.name for f in ROLLUP_SCHEMA.fields]
-    live = Path(rollup_dir)
-    swap = live.with_suffix(".swap")
-    # Crash recovery: a previous batch completed its swap write but died
-    # between removing the live dir and renaming — adopt it (a complete
-    # meta file implies the parquet written before it is complete).
-    if not live.exists() and _stream_meta_read(swap) is not None:
-        os.rename(swap, live)
-    meta = _stream_meta_read(live)
-    if _stream_replay_noop(meta, batch_id, stream_id, "rollup"):
-        return  # replayed micro-batch from the same stream: no-op
-    rows = metadata_batch_to_index_rows(batch)
-    w = Window.partitionBy("marketId").orderBy(
-        F.col("marketMetadataFilePath").desc()
-    )
-    rows = (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    part = materialize(summarize(rows), "stream-rollup-partials")
-    if not part.head(1):
-        return
-    spark_ = part.sparkSession
-    try:
-        old = spark_.read.schema(ROLLUP_SCHEMA).parquet(str(live))
-        both = old.unionByName(part)
-    except AnalysisException:  # first batch: no rollup yet
-        both = part
-    merged = (
-        both.groupBy("eventTypeId", "startDate")
-        .agg(
-            F.sum("markets").alias("markets"),
-            F.sum("bspMarkets").alias("bspMarkets"),
-            F.sum("inPlayMarkets").alias("inPlayMarkets"),
-            F.sum("settledMarkets").alias("settledMarkets"),
-            F.sum("runnersTotal").alias("runnersTotal"),
-            F.min("firstStart").alias("firstStart"),
-            F.max("lastStart").alias("lastStart"),
-        )
-        .select(*out_cols)
-    )
-    merged = materialize(merged, "stream-rollup-merged")  # before the swap
-    # Idempotent swap: parquet into .swap, meta (recording batch_id) last,
-    # then replace live. Any crash before the rename leaves the old live
-    # dir serving and the replay re-merges from it; a crash between rmtree
-    # and rename is the adoption case handled above.
-    merged.coalesce(1).write.mode("overwrite").parquet(str(swap))
-    (swap / _STREAM_META_NAME).write_text(
-        json.dumps(
-            {"last_batch_id": batch_id}
-            | ({"stream_id": stream_id} if stream_id else {})
-        )
-    )
-    if live.exists():
-        shutil.rmtree(live)
-    os.rename(swap, live)
-
-
 def spec_rollup_merge_batch(
     batch: DataFrame,
     batch_id: int,
@@ -406,14 +316,27 @@ def spec_rollup_merge_batch(
     spec: dict,
     stream_id: "str | None" = None,
 ) -> None:
-    """Idempotent micro-batch fold for a USER-SPEC rollup (round 9): the
-    spec's partials are all mergeable (counts/sums add, min/max
+    """One idempotent micro-batch fold for ``start_spec_rollup_stream``.
+
+    The spec's partials are all mergeable (counts/sums add, min/max
     re-extremize, HLL sketches union), so the batch partial folds into
     the at-rest frame with one groupBy — the same at-rest grain
-    (eventTypeId x dims x partial columns) the batch ``create_rollup(
-    name=, dims=, aggs=)`` stores, so ``rollup.spec_view`` serves either
-    one identically. Same batch-id-recorded swap + crash adoption as
-    ``rollup_merge_batch``."""
+    (eventTypeId x dims x partial columns) the batch ``create_rollup()``
+    stores, so ``rollup.spec_view`` serves either one identically. Pass
+    ``rollup.BUILTIN_ROLLUP`` as ``spec`` for the built-in rollup.
+
+    ``foreachBatch`` is at-least-once and an additive fold is not
+    naturally idempotent, so the sink makes itself so: every swap
+    records the applied ``batch_id`` in ``_stream_meta.json`` inside the
+    rollup directory (underscore-hidden from Spark's file listing) and a
+    replayed batch with ``batch_id <= recorded`` no-ops. The swap is
+    write-aside + rename: data parquet first, then the meta file (a
+    complete meta implies complete data), then replace the live dir; a
+    crash between the rmtree and the rename is healed on the next
+    invocation by adopting the completed ``.swap`` dir — no window loses
+    history or double-counts. Module-level so tests can drive replay
+    directly.
+    """
     import json
     import os
     import shutil
@@ -429,6 +352,8 @@ def spec_rollup_merge_batch(
 
     live = Path(rollup_dir)
     swap = live.with_suffix(".swap")
+    # Crash recovery: a previous batch completed its swap write but died
+    # between removing the live dir and renaming — adopt it.
     if not live.exists() and _stream_meta_read(swap) is not None:
         os.rename(swap, live)
     meta = _stream_meta_read(live)
@@ -474,7 +399,7 @@ def spec_rollup_merge_batch(
 def read_spec_stream_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Serve a streamed spec rollup at USER grain (partials merged, HLL
     estimated) — the same view ``BetfairDatabase.rollup(name)`` serves
-    for the batch-maintained twin."""
+    for the batch-maintained twin (``rollup()`` for the built-in spec)."""
     from pathlib import Path
 
     from betfair_database_spark.rollup import spec_view
@@ -499,7 +424,7 @@ def ann_append_batch(
 ) -> int:
     """One micro-batch of vectors into the at-rest ANN index — the
     foreachBatch sink body, exposed module-level so tests can drive
-    replay directly (same convention as rollup_merge_batch). Idempotent:
+    replay directly (same convention as spec_rollup_merge_batch). Idempotent:
     the applied batch_id is recorded in the index's committed manifest
     and a replayed batch from the SAME stream no-ops; ``stream_id``
     (``checkpoint_instance_id`` = path + per-instance nonce — round-12
@@ -572,62 +497,17 @@ def start_spec_rollup_stream(
     max_files_per_trigger: int | None = None,
     trigger_once: bool = False,
 ):
-    """Continuous-aggregate twin of ``create_rollup(name=, dims=, aggs=)``:
-    newly-landed metadata folds into a user-spec rollup without an index
-    in between. ``spec`` is ``rollup.parse_spec`` output. Same
-    append-only landing-zone contract and idempotent replay-safe sink as
-    ``start_rollup_stream``."""
-
-    sid = checkpoint_instance_id(checkpoint_dir)
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        spec_rollup_merge_batch(
-            batch, batch_id, rollup_dir, spec, stream_id=sid
-        )
-
-    writer = (
-        read_catalogue_stream(spark, landing_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_rollup_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    rollup_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-    trigger_once: bool = False,
-):
-    """Continuous-aggregate twin of ``BetfairDatabase.create_rollup()``:
-    newly-landed metadata files fold into the per-(eventTypeId, start
-    date) rollup WITHOUT an index in between — each micro-batch runs the
-    batch parse → flatten → enrich lineage, computes the batch
-    ``rollup.summarize`` partial over its rows, and merges it into the
-    at-rest rollup additively (sums add, counts add, min/max strings
-    merge — every rollup aggregate is mergeable by construction).
+    """Continuous-aggregate twin of ``create_rollup()``: newly-landed
+    metadata files fold into a spec rollup WITHOUT an index in between —
+    each micro-batch runs the batch parse → flatten → enrich lineage,
+    computes the spec's partials over its rows, and merges them into the
+    at-rest rollup additively. ``spec`` is ``rollup.parse_spec`` output;
+    ``rollup.BUILTIN_ROLLUP`` streams the built-in per-(eventTypeId,
+    start date) rollup. Serve the result with ``read_spec_stream_rollup``.
 
     State: the file-source checkpoint plus the group-cardinality-sized
-    rollup file itself; no custom state store, so at landing-zone scale
-    the per-batch cost is the new files' parse + one merge over
-    |sports| x |days| rows.
-
-    Exactly-once: ``foreachBatch`` is at-least-once — Structured
-    Streaming re-runs a micro-batch after a failure between the sink
-    write and the checkpoint commit — and an additive fold is NOT
-    naturally idempotent, so the sink makes itself so: every swap
-    records the applied ``batch_id`` in ``_stream_meta.json`` inside the
-    rollup directory (underscore-hidden from Spark's file listing) and a
-    replayed batch with ``batch_id <= recorded`` no-ops. The swap is
-    write-aside + rename: data parquet first, then the meta file (a
-    complete meta implies complete data), then replace the live dir; a
-    crash between the rmtree and the rename is healed on the next batch
-    by adopting the completed ``.swap`` dir, so no window loses history
-    or double-counts.
+    rollup file itself; no custom state store. Exactly-once comes from
+    the idempotent sink (``spec_rollup_merge_batch``).
 
     Contract: append-only landing zone — each market contributes once
     (within a batch the lexicographically-last path for a marketId wins,
@@ -637,10 +517,13 @@ def start_rollup_stream(
     same division of labor TimescaleDB-style continuous aggregates use
     (inserts fold incrementally, updates trigger re-materialization).
     """
+
     sid = checkpoint_instance_id(checkpoint_dir)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        rollup_merge_batch(batch, batch_id, rollup_dir, stream_id=sid)
+        spec_rollup_merge_batch(
+            batch, batch_id, rollup_dir, spec, stream_id=sid
+        )
 
     writer = (
         read_catalogue_stream(spark, landing_dir, max_files_per_trigger)

@@ -106,14 +106,22 @@ def main() -> int:
         # materialized rollup (round 8): build, read back, incremental
         # maintenance under insert, staleness heal path
         from betfair_database_spark.database import BetfairDatabase
-        from betfair_database_spark.rollup import summarize
+        from betfair_database_spark.rollup import (
+            BUILTIN_ROLLUP,
+            spec_view,
+            summarize_spec,
+        )
+
+        def recomputed():
+            ref = summarize_spec(db._read_index(), BUILTIN_ROLLUP)
+            return {tuple(r) for r in spec_view(ref, BUILTIN_ROLLUP).collect()}
 
         db = BetfairDatabase(ins_db)
         n_roll = db.create_rollup()
         print(f"rollup rows: {n_roll}")
         assert n_roll > 0
         got = {tuple(r) for r in db.rollup().collect()}
-        want = {tuple(r) for r in summarize(db._read_index()).collect()}
+        want = recomputed()
         assert got == want, "rollup != from-scratch recompute"
         # mutate + insert → rollup must follow without create_rollup()
         cat.write_text(
@@ -124,7 +132,7 @@ def main() -> int:
         )
         assert bfdb.insert(ins_db, src, copy=True, on_duplicates="update") == 1
         got = {tuple(r) for r in db.rollup().collect()}
-        want = {tuple(r) for r in summarize(db._read_index()).collect()}
+        want = recomputed()
         assert got == want, "rollup stale after insert"
         print("rollup: incremental maintenance verified")
 

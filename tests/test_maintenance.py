@@ -1132,7 +1132,8 @@ n = db.insert({str(src2)!r}, copy=True)
 
 
 class TestMaterializedRollup:
-    """Continuous-aggregate rollup (rollup.py): incrementally maintained by
+    """The built-in continuous-aggregate rollup (``rollup.BUILTIN_ROLLUP``,
+    served by the spec machinery): incrementally maintained by
     insert()/clean(), never re-reads the index on an incremental update,
     and refuses to serve stale aggregates after a simulated crash between
     the index commit and the rollup swap."""
@@ -1152,9 +1153,16 @@ class TestMaterializedRollup:
 
     @staticmethod
     def _recomputed(db):
-        from betfair_database_spark.rollup import summarize
+        from betfair_database_spark.rollup import (
+            BUILTIN_ROLLUP,
+            spec_view,
+            summarize_spec,
+        )
 
-        return {tuple(r) for r in summarize(db._read_index()).collect()}
+        ref = spec_view(
+            summarize_spec(db._read_index(), BUILTIN_ROLLUP), BUILTIN_ROLLUP
+        )
+        return {tuple(r) for r in ref.collect()}
 
     @staticmethod
     def _materialized(db):
@@ -1180,9 +1188,17 @@ class TestMaterializedRollup:
         db, _ = env
         n = db.create_rollup()
         got = db.rollup()
-        from betfair_database_spark.rollup import ROLLUP_SCHEMA
-
-        assert got.columns == [f.name for f in ROLLUP_SCHEMA.fields]
+        assert [f.simpleString() for f in got.schema.fields] == [
+            "eventTypeId:string",
+            "startDate:date",
+            "markets:bigint",
+            "bspMarkets:bigint",
+            "inPlayMarkets:bigint",
+            "settledMarkets:bigint",
+            "runnersTotal:bigint",
+            "firstStart:string",
+            "lastStart:string",
+        ]
         rows = self._materialized(db)
         assert len(rows) == n > 0
         assert rows == self._recomputed(db)
@@ -1220,16 +1236,16 @@ class TestMaterializedRollup:
             raise AssertionError("incremental rollup update re-read the index")
 
         monkeypatch.setattr(BetfairDatabase, "_read_index", boom)
-        R.rollup_update(db, repl, touched)  # must not touch the index
+        R.spec_rollup_update(db, repl, touched)  # must not touch the index
         monkeypatch.undo()
         assert self._materialized(db) == self._recomputed(db)
 
     def test_stale_rollup_detected_and_healed(self, env):
         from betfair_database_spark.exceptions import StaleRollupError
-        from betfair_database_spark.rollup import _META_NAME, rollup_path
+        from betfair_database_spark.rollup import _META_NAME, spec_rollup_path
 
         db, _ = env
-        meta_file = rollup_path(db.database_dir) / _META_NAME
+        meta_file = spec_rollup_path(db.database_dir, "builtin") / _META_NAME
         meta = json.loads(meta_file.read_text())
         # simulate a crash between the index commit and the rollup swap:
         # the rollup's recorded snapshot lags the committed index manifest
@@ -1244,8 +1260,8 @@ class TestMaterializedRollup:
         """A rollup whose recorded snapshot is MORE than one behind the
         commit being maintained (a prior op crashed between its index
         commit and rollup swap) must NOT be carried over and re-stamped
-        fresh by the next incremental update — rollup_update detects the
-        gap (sequential snapshots: only snap-1/snap are safe bases) and
+        fresh by the next incremental update — spec_rollup_update detects
+        the gap (sequential snapshots: only snap-1/snap are safe bases) and
         heals with a full rebuild. Pinned by tampering an UNTOUCHED
         partition's rollup row: laundering would preserve the tamper and
         stamp it fresh; the rebuild discards it."""
@@ -1255,23 +1271,34 @@ class TestMaterializedRollup:
         from betfair_database_spark.database import _manifest_snapshot_no
 
         db, _ = env
-        live = R.rollup_path(db.database_dir)
-        rows = db.spark.read.schema(R.ROLLUP_SCHEMA).parquet(str(live))
+        live = R.spec_rollup_path(db.database_dir, "builtin")
+        rows = db.spark.read.parquet(str(live))
         parts = sorted(
             r[0] for r in rows.select("eventTypeId").distinct().collect()
         )
         assert len(parts) >= 2
         tampered_part, touched_part = parts[0], parts[-1]
         bad = rows.withColumn(
-            "markets",
+            "_p_markets",
             F.when(
-                F.col("eventTypeId") == tampered_part, F.col("markets") + 999
-            ).otherwise(F.col("markets")),
+                F.col("eventTypeId") == tampered_part,
+                F.col("_p_markets") + 999,
+            ).otherwise(F.col("_p_markets")),
         ).localCheckpoint()
         snap = _manifest_snapshot_no(db._index_path)
-        R._atomic_swap(db, bad, snap - 2)  # stale by 2: crashed prior swap
+        # stale by 2: a prior swap crashed
+        R._spec_atomic_swap(
+            db,
+            live,
+            bad,
+            {
+                "index_snapshot": snap - 2,
+                "spec": R.BUILTIN_ROLLUP,
+                "name": "builtin",
+            },
+        )
         repl = db._read_index().localCheckpoint()
-        R.rollup_update(db, repl, [touched_part])
+        R.spec_rollup_update(db, repl, [touched_part])
         # healed: tamper gone, stamped current, serves without raising
         assert self._materialized(db) == self._recomputed(db)
 
@@ -1280,42 +1307,29 @@ class TestMaterializedRollup:
         db.index(force=True)
         assert self._materialized(db) == self._recomputed(db)
 
-    def test_pre_format2_rollup_refused_and_healed(self, env):
-        """Round 12 (ADVICE): a pre-round-11 rollup (no format stamp)
-        may store coalesced 0s where format 2 stores NULL for all-NULL
-        sum cells in partitions never touched since. It must never be a
-        routing candidate (the routed sum would be 0 where the scan
-        says NULL), rollup() must refuse it loudly, and the next
-        maintenance op heals it with a one-time full rebuild."""
-        from betfair_database_spark import rollup as R
-        from betfair_database_spark.exceptions import StaleRollupError
-
+    def test_builtin_name_is_reserved_and_startDate_routes(self, env):
+        """``builtin`` names the built-in spec: with dims/aggs it is
+        refused, without them it heals exactly like create_rollup(). Its
+        derived ``startDate`` dim routes like any spec dim and equals
+        the scan, which resolves the alias from the persisted spec."""
         db, _ = env
-        db.create_rollup()
-        mf = R.rollup_path(db.database_dir) / R._META_NAME
-        orig = json.loads(mf.read_text())
-        assert orig["format"] == R.ROLLUP_FORMAT
-        meta = dict(orig)
-        del meta["format"]  # downgrade: pretend a pre-round-11 writer
-        mf.write_text(json.dumps(meta))
-        q = dict(
-            columns=["eventTypeId", "count(*) AS n"],
-            group_by=["eventTypeId"],
-        )
-        db.select(**q)
-        assert db.last_select_route == "scan"  # never a candidate
-        with pytest.raises(StaleRollupError, match="storage format"):
-            db.rollup()
-        # maintenance heals: the incremental update path rebuilds
-        repl = db._read_index().localCheckpoint()
-        touched = [
-            r[0] for r in repl.select("eventTypeId").distinct().collect()
-        ]
-        R.rollup_update(db, repl, touched)
-        assert json.loads(mf.read_text())["format"] == R.ROLLUP_FORMAT
-        db.select(**q)
-        assert db.last_select_route == "rollup:builtin"
+        with pytest.raises(ValueError, match="builtin"):
+            db.create_rollup(
+                name="builtin", dims=["marketType"], aggs=["n=count()"]
+            )
+        assert db.create_rollup(name="builtin") == db.create_rollup()
         assert self._materialized(db) == self._recomputed(db)
+        q = dict(
+            columns=["startDate", "count(*) AS n"], group_by=["startDate"]
+        )
+        got = sorted(tuple(r) for r in db.select(return_dict=False, **q))
+        assert db.last_select_route == "rollup:builtin"
+        want = sorted(
+            tuple(r)
+            for r in db.select(return_dict=False, use_rollups=False, **q)
+        )
+        assert db.last_select_route == "scan"
+        assert got == want and got
 
 
 class TestSpecRollups:
@@ -1495,7 +1509,11 @@ def test_rollup_stays_fresh_under_time_travel_and_vacuum(spark, tmp_path):
     snapshots stay readable; vacuum() reaps history without touching
     rollup freshness."""
     from betfair_database_spark.database import BetfairDatabase
-    from betfair_database_spark.rollup import summarize
+    from betfair_database_spark.rollup import (
+        BUILTIN_ROLLUP,
+        spec_view,
+        summarize_spec,
+    )
 
     base = tmp_path
     target = base / "db"
@@ -1515,7 +1533,10 @@ def test_rollup_stays_fresh_under_time_travel_and_vacuum(spark, tmp_path):
 
     # rollup followed the live snapshot...
     got = {tuple(r) for r in db.rollup().collect()}
-    want = {tuple(r) for r in summarize(db._read_index()).collect()}
+    ref = spec_view(
+        summarize_spec(db._read_index(), BUILTIN_ROLLUP), BUILTIN_ROLLUP
+    )
+    want = {tuple(r) for r in ref.collect()}
     assert got == want
     # ...while the PRE-update snapshot is still readable (time travel)
     old = db.select_df(version=v0)
@@ -1728,11 +1749,7 @@ class TestRollupRouting:
     def test_stale_rollup_falls_back_to_scan(self, env):
         import json as _json
 
-        from betfair_database_spark.rollup import (
-            _META_NAME,
-            rollup_path,
-            spec_rollup_path,
-        )
+        from betfair_database_spark.rollup import _META_NAME, spec_rollup_path
 
         db, _ = env
         q = dict(
@@ -1743,7 +1760,7 @@ class TestRollupRouting:
         metas = []
         for p in (
             spec_rollup_path(db.database_dir, "byvenue"),
-            rollup_path(db.database_dir),
+            spec_rollup_path(db.database_dir, "builtin"),
         ):
             mf = p / _META_NAME
             meta = _json.loads(mf.read_text())
@@ -2175,7 +2192,7 @@ def test_all_null_sum_cell_stores_null_partial(spark):
     all NULLs. Mixed cells still merge by NULL-skipping sum."""
     from pyspark.sql import functions as F
 
-    from betfair_database_spark.rollup import summarize
+    from betfair_database_spark.rollup import BUILTIN_ROLLUP, summarize_spec
 
     rows = [
         ("7", "2024-01-01T10:00:00.000Z", None, None, None, None),
@@ -2187,17 +2204,17 @@ def test_all_null_sum_cell_stores_null_partial(spark):
         "eventTypeId string, marketStartTime string, bspMarket int, "
         "turnInPlayEnabled int, marketSettledTime string, runners int",
     )
-    part = summarize(df)
+    part = summarize_spec(df, BUILTIN_ROLLUP)
     cells = {r["eventTypeId"]: r for r in part.collect()}
-    assert cells["4"]["inPlayMarkets"] is None  # all-NULL cell -> NULL
-    assert cells["4"]["bspMarkets"] == 1
-    assert cells["7"]["bspMarkets"] is None
-    assert cells["7"]["runnersTotal"] == 4
+    assert cells["4"]["_p_inPlayMarkets"] is None  # all-NULL cell -> NULL
+    assert cells["4"]["_p_bspMarkets"] == 1
+    assert cells["7"]["_p_bspMarkets"] is None
+    assert cells["7"]["_p_runnersTotal"] == 4
     # the routed merge (sum of partials) == the scan's sum(), per column
     merged = part.agg(
-        F.sum("bspMarkets").alias("b"),
-        F.sum("inPlayMarkets").alias("i"),
-        F.sum("runnersTotal").alias("r"),
+        F.sum("_p_bspMarkets").alias("b"),
+        F.sum("_p_inPlayMarkets").alias("i"),
+        F.sum("_p_runnersTotal").alias("r"),
     ).first()
     scan = df.agg(
         F.sum("bspMarket").alias("b"),

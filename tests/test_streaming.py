@@ -1047,7 +1047,8 @@ def test_streaming_ohlc_matches_batch_rollup(spark, tmp_path):
 
 def test_streaming_rollup_matches_batch_create_rollup(spark, tmp_path):
     """Continuous-aggregate parity: replaying the paired fixture corpus
-    through start_rollup_stream (one file per micro-batch, so the
+    through start_spec_rollup_stream with the built-in spec (one file per
+    micro-batch, so the
     additive merge runs many times) produces EXACTLY the rollup the
     batch create_rollup() materializes over the same corpus — every
     aggregate is mergeable, so incremental fold == one-shot aggregate."""
@@ -1056,8 +1057,11 @@ def test_streaming_rollup_matches_batch_create_rollup(spark, tmp_path):
     from tests.corpus import build_corpus
 
     from betfair_database_spark.database import BetfairDatabase
-    from betfair_database_spark.rollup import ROLLUP_SCHEMA
-    from betfair_database_spark.streaming.ingest import start_rollup_stream
+    from betfair_database_spark.rollup import BUILTIN_ROLLUP
+    from betfair_database_spark.streaming.ingest import (
+        read_spec_stream_rollup,
+        start_spec_rollup_stream,
+    )
 
     src = tmp_path / "full"
     build_corpus(src)
@@ -1078,16 +1082,18 @@ def test_streaming_rollup_matches_batch_create_rollup(spark, tmp_path):
     assert batch_rows  # non-degenerate corpus
 
     rollup_dir = str(tmp_path / "stream_rollup.parquet")
-    q = start_rollup_stream(
+    q = start_spec_rollup_stream(
         spark,
         str(corpus),
         rollup_dir,
         str(tmp_path / "ckpt_rollup"),
+        BUILTIN_ROLLUP,
         max_files_per_trigger=1,  # force many incremental merges
         trigger_once=True,
     )
     q.awaitTermination(180)
-    streamed = spark.read.schema(ROLLUP_SCHEMA).parquet(rollup_dir)
+    streamed = read_spec_stream_rollup(spark, rollup_dir)
+    assert streamed.columns == db.rollup().columns
     assert sorted(tuple(r) for r in streamed.collect()) == batch_rows
 
 
@@ -1104,8 +1110,14 @@ def test_streaming_rollup_replay_is_idempotent(spark, tmp_path):
 
     from tests.corpus import build_corpus
 
-    from betfair_database_spark.rollup import ROLLUP_SCHEMA
-    from betfair_database_spark.streaming.ingest import rollup_merge_batch
+    from betfair_database_spark.rollup import BUILTIN_ROLLUP
+    from betfair_database_spark.streaming.ingest import (
+        read_spec_stream_rollup,
+        spec_rollup_merge_batch,
+    )
+
+    def fold(batch, batch_id, rollup_dir):
+        spec_rollup_merge_batch(batch, batch_id, rollup_dir, BUILTIN_ROLLUP)
 
     src = tmp_path / "corpus"
     build_corpus(src)
@@ -1116,39 +1128,28 @@ def test_streaming_rollup_replay_is_idempotent(spark, tmp_path):
     )
     rollup_dir = str(tmp_path / "roll.parquet")
 
-    def snap():
+    def snap(d=rollup_dir):
         return sorted(
-            tuple(r)
-            for r in spark.read.schema(ROLLUP_SCHEMA)
-            .parquet(rollup_dir)
-            .collect()
+            tuple(r) for r in read_spec_stream_rollup(spark, d).collect()
         )
 
-    rollup_merge_batch(mk(metas[:1]), 0, rollup_dir)
+    fold(mk(metas[:1]), 0, rollup_dir)
     after_b0 = snap()
-    rollup_merge_batch(mk(metas[:1]), 0, rollup_dir)  # replayed batch 0
+    fold(mk(metas[:1]), 0, rollup_dir)  # replayed batch 0
     assert snap() == after_b0  # no double-count
-    rollup_merge_batch(mk(metas[1:]), 1, rollup_dir)
+    fold(mk(metas[1:]), 1, rollup_dir)
     after_b1 = snap()
     assert after_b1 != after_b0
-    rollup_merge_batch(mk(metas[1:]), 1, rollup_dir)  # replayed batch 1
+    fold(mk(metas[1:]), 1, rollup_dir)  # replayed batch 1
     assert snap() == after_b1
     # one-shot fold over everything agrees with the incremental chain
     oneshot_dir = str(tmp_path / "oneshot.parquet")
-    rollup_merge_batch(mk(metas), 0, oneshot_dir)
-    assert (
-        sorted(
-            tuple(r)
-            for r in spark.read.schema(ROLLUP_SCHEMA)
-            .parquet(oneshot_dir)
-            .collect()
-        )
-        == after_b1
-    )
+    fold(mk(metas), 0, oneshot_dir)
+    assert snap(oneshot_dir) == after_b1
     # crash between rmtree(live) and rename(swap): live gone, swap whole
     swap = rollup_dir[: -len(".parquet")] + ".swap"
     os.rename(rollup_dir, swap)
-    rollup_merge_batch(mk(metas[1:]), 1, rollup_dir)  # adopt + replay no-op
+    fold(mk(metas[1:]), 1, rollup_dir)  # adopt + replay no-op
     assert snap() == after_b1
 
 
@@ -1392,7 +1393,13 @@ def test_rollup_sink_recreated_checkpoint_same_stream_id_rules(
 
     from pyspark.sql import functions as F
 
-    from betfair_database_spark.streaming.ingest import rollup_merge_batch
+    from betfair_database_spark.rollup import BUILTIN_ROLLUP
+    from betfair_database_spark.streaming.ingest import spec_rollup_merge_batch
+
+    def fold(batch, batch_id, rollup_dir, stream_id):
+        spec_rollup_merge_batch(
+            batch, batch_id, rollup_dir, BUILTIN_ROLLUP, stream_id=stream_id
+        )
 
     src = tmp_path / "corpus"
     build_corpus(src)
@@ -1409,22 +1416,22 @@ def test_rollup_sink_recreated_checkpoint_same_stream_id_rules(
         )
     )
     rollup_dir = str(tmp_path / "roll")
-    rollup_merge_batch(batch, 0, rollup_dir, stream_id="A")
-    base = spark.read.parquet(rollup_dir).groupBy().sum("markets").collect()
+    fold(batch, 0, rollup_dir, stream_id="A")
+    base = spark.read.parquet(rollup_dir).groupBy().sum("_p_markets").collect()
     # same identity replay: silent no-op
     with _warnings.catch_warnings():
         _warnings.simplefilter("error")
-        rollup_merge_batch(batch, 0, rollup_dir, stream_id="A")
+        fold(batch, 0, rollup_dir, stream_id="A")
     assert (
-        spark.read.parquet(rollup_dir).groupBy().sum("markets").collect()
+        spark.read.parquet(rollup_dir).groupBy().sum("_p_markets").collect()
         == base
     )
     # new identity, non-advancing id: applies loudly (markets double —
     # at-least-once redelivery is the recreated checkpoint's contract)
     with pytest.warns(UserWarning, match="stream identity changed"):
-        rollup_merge_batch(batch, 0, rollup_dir, stream_id="B")
+        fold(batch, 0, rollup_dir, stream_id="B")
     doubled = (
-        spark.read.parquet(rollup_dir).groupBy().sum("markets").collect()
+        spark.read.parquet(rollup_dir).groupBy().sum("_p_markets").collect()
     )
     assert doubled[0][0] == base[0][0] * 2
 
@@ -1756,11 +1763,16 @@ def test_streaming_rollup_survives_midstream_crash(spark, tmp_path):
     """Kill the rollup stream after the sink committed a batch but
     before the checkpoint advanced; the restarted query redelivers that
     batch and the additive fold must NOT double-count it."""
-    from betfair_database_spark.rollup import summarize
+    from betfair_database_spark.rollup import (
+        BUILTIN_ROLLUP,
+        spec_view,
+        summarize_spec,
+    )
     from betfair_database_spark.streaming.ingest import (
         checkpoint_instance_id,
         metadata_batch_to_index_rows,
-        rollup_merge_batch,
+        read_spec_stream_rollup,
+        spec_rollup_merge_batch,
     )
 
     corpus = _paired_corpus(tmp_path, "roll_chaos")
@@ -1771,7 +1783,9 @@ def test_streaming_rollup_survives_midstream_crash(spark, tmp_path):
         spark,
         corpus,
         ckpt,
-        lambda b, bid: rollup_merge_batch(b, bid, rollup_dir, stream_id=sid),
+        lambda b, bid: spec_rollup_merge_batch(
+            b, bid, rollup_dir, BUILTIN_ROLLUP, stream_id=sid
+        ),
         tmp_path / "roll_crashed",
         crash_on_batch=1,
     )
@@ -1788,12 +1802,13 @@ def test_streaming_rollup_survives_midstream_crash(spark, tmp_path):
             F.col("value").alias("content"),
         )
     )
-    want = sorted(
-        tuple(r)
-        for r in summarize(metadata_batch_to_index_rows(batch)).collect()
+    ref = spec_view(
+        summarize_spec(metadata_batch_to_index_rows(batch), BUILTIN_ROLLUP),
+        BUILTIN_ROLLUP,
     )
+    want = sorted(tuple(r) for r in ref.collect())
     got = sorted(
-        tuple(r) for r in spark.read.parquet(rollup_dir).collect()
+        tuple(r) for r in read_spec_stream_rollup(spark, rollup_dir).collect()
     )
     assert got == want and got
 
